@@ -203,12 +203,8 @@ object GraftBoost {
         forTraining = true, loadCallbacks = distributedCallbacks,
         knownRows = totalRows)
     }
-    val nondetPlan = df.queryExecution.analyzed.exists {
-      case _: org.apache.spark.sql.catalyst.plans.logical.Sample => true
-      case p => p.expressions.exists(!_.deterministic)
-    }
     val cachePrepared = distributedCallbacks.nonEmpty ||
-      obj.needsGroups || nondetPlan
+      obj.needsGroups || nondetPlan(df)
     val prepared0 = prepare(df, spec, obj, numWorkers, distributedCallbacks)
     val prepared =
       if (cachePrepared) prepared0.persist(params.storageLevel)
@@ -398,7 +394,7 @@ object GraftBoost {
     // (separate per-label plan evaluations CANNOT be zipped instead —
     // an exchange in the plan redistributes rows by the projected
     // bytes, which differ per label). Each label then trains against a
-    // cheap view that swaps in its labels column; the packed
+    // cheap view that copies out its labels column; the packed
     // bins/weights/margins arrays are shared by reference and the
     // per-label boost owns (and frees) only its view. Cuts are
     // identical to the per-label pipeline (same features, same binner
@@ -412,59 +408,21 @@ object GraftBoost {
     spec.validate(df, requireLabel = true)
     val catFlags = spec.categoricalFlags(df)
     checkMonotoneCats(params, catFlags)
-    val k = obj.numOutputs
-    val init = obj.initMargin(params.baseScore)
     val nLabels = spec.labelCol.size
-    val multiRows = prepareMulti(df, spec, numWorkers)
-    val totalRows = df.count()
-    val bins = Binner.fit(multiRows.map(_._1), totalRows, params.maxBins,
-      seed = params.seed + 42, catFeatures = catFlags,
-      knownWidth = spec.featureWidth(df))
-    val composite = multiRows.mapPartitions({ it0 =>
-      val it = it0.buffered
-      val nf = bins.numFeatures
-      val cap = graft.learner.TrainBlock.capacity(nf, k)
-      new Iterator[(TrainBlock, Array[Array[Float]])] {
-        def hasNext: Boolean = it.hasNext
-        def next(): (TrainBlock, Array[Array[Float]]) = {
-          val binsArr = new Array[Byte](cap * nf)
-          val labels = Array.fill(nLabels)(new Array[Float](cap))
-          val weights = new Array[Float](cap)
-          val margins = new Array[Float](cap * k)
-          var n = 0
-          while (it.hasNext && n < cap) {
-            val (f, ys, w, bm) = it.next()
-            val rb = bins.binRow(f)
-            System.arraycopy(rb, 0, binsArr, n * nf, nf)
-            var j = 0
-            while (j < nLabels) { labels(j)(n) = ys(j); j += 1 }
-            weights(n) = w
-            val m0 = if (bm.isNaN) init else bm
-            java.util.Arrays.fill(margins, n * k, n * k + k, m0)
-            n += 1
-          }
-          (new TrainBlock(n, nf, k,
-            java.util.Arrays.copyOf(binsArr, n * nf),
-            java.util.Arrays.copyOf(labels(0), n),
-            java.util.Arrays.copyOf(weights, n), null, null,
-            java.util.Arrays.copyOf(margins, n * k)),
-            Array.tabulate(nLabels - 1)(j =>
-              java.util.Arrays.copyOf(labels(j + 1), n)))
-        }
-      }
-    }, preservesPartitioning = true)
-      .persist(params.storageLevel)
-    composite.foreachPartition(_ => ())
+    val (composite, bins, totalRows) = packMulti(df, spec, params,
+      catFlags, obj.numOutputs, obj.initMargin(params.baseScore),
+      numWorkers)
     val names = attachableNames(spec, df, bins.numFeatures)
     try {
       MultiLabelResult(spec.labelCol.zipWithIndex.map { case (l, j) =>
         val lSpec = singleLabelSpec(spec, l)
-        val blocks =
-          if (j == 0) composite.map(_._1)
-          else composite.map { case (b, others) =>
-            new TrainBlock(b.n, b.nf, b.k, b.bins, others(j - 1),
-              b.weights, null, null, b.margins)
-          }
+        val blocks = composite.map { b =>
+          val labels = new Array[Float](b.n)
+          var i = 0
+          while (i < b.n) { labels(i) = b.labels(i * nLabels + j); i += 1 }
+          new TrainBlock(b.n, b.nf, b.k, b.bins, labels, b.weights, null,
+            null, b.margins)
+        }
         val evalRdds = evals.map { case (n, e) =>
           if (e eq df) (n, blocks)
           else (n, toBinned(prepare(e, lSpec, obj, numWorkers), bins,
@@ -480,19 +438,38 @@ object GraftBoost {
     } finally composite.unpersist(blocking = false)
   }
 
-  /** One-pass multi-label row view: (features, all L labels, weight,
-    * baseMargin) — the label-invariant twin of [[prepare]] for the
-    * pointwise [[trainMultiLabel]] fast path. */
-  private def prepareMulti(df: DataFrame, spec: DMatrixSpec,
-      numWorkers: Int)
-      : RDD[(Array[Float], Array[Float], Float, Float)] = {
+  /** True when re-evaluating `df`'s plan may keep different rows: a
+    * Sample (seeded but order-dependent over an unpinned shuffle) or a
+    * non-deterministic expression such as rand(). Such inputs must be
+    * prepared once and cached, so the count, binner-fit and pack scans
+    * see the same rows. */
+  private def nondetPlan(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.exists {
+      case _: org.apache.spark.sql.catalyst.plans.logical.Sample => true
+      case p => p.expressions.exists(!_.deterministic)
+    }
+
+  /** The multi-label pack shared by [[trainMultiLabel]] and
+    * [[trainMultiOutput]]: ONE prepare pass (the label-invariant twin
+    * of [[prepare]]) assembles every label column, the binner fits the
+    * cuts, and rows pack into cached [[TrainBlock]]s holding all L
+    * labels per row (row-major, stride L) and `k` margins per row at
+    * `init` (or the row's base margin).
+    * Returns the materialized blocks (caller unpersists), the bins and
+    * the exact row count — from the prepared cache when the plan is
+    * non-deterministic ([[materialize]]'s rule). */
+  private[api] def packMulti(df: DataFrame, spec: DMatrixSpec,
+      params: TrainParams, catFlags: Array[Boolean], k: Int, init: Float,
+      numWorkers: Int): (RDD[TrainBlock], Binner.Bins, Long) = {
+    val nLabels = spec.labelCol.size
     val base = if (numWorkers > 0) df.repartition(numWorkers) else df
     val assembled = spec.assemble(base)
     val cols = assembled.columns
     val lis = spec.labelCol.map(cols.indexOf(_)).toArray
     val wi = spec.weightCol.map(cols.indexOf(_)).getOrElse(-1)
     val mi = spec.baseMarginCol.map(cols.indexOf(_)).getOrElse(-1)
-    assembled.rdd.mapPartitions({ it =>
+    // (features, all L labels, weight, base margin) per row
+    val rows0 = assembled.rdd.mapPartitions({ it =>
       it.map { row: Row =>
         val f = row.getSeq[Float](0).toArray
         val ys = lis.map(li =>
@@ -503,6 +480,47 @@ object GraftBoost {
         (f, ys, w, m)
       }
     }, preservesPartitioning = true)
+    val cachePrepared = nondetPlan(df)
+    val rows =
+      if (cachePrepared) rows0.persist(params.storageLevel) else rows0
+    val totalRows = if (cachePrepared) rows.count() else df.count()
+    val bins = Binner.fit(rows.map(_._1), totalRows, params.maxBins,
+      seed = params.seed + 42, catFeatures = catFlags,
+      knownWidth = spec.featureWidth(df))
+    val blocks = rows.mapPartitions({ it0 =>
+      val it = it0.buffered
+      val nf = bins.numFeatures
+      val cap = graft.learner.TrainBlock.capacity(nf, k)
+      new Iterator[TrainBlock] {
+        def hasNext: Boolean = it.hasNext
+        def next(): TrainBlock = {
+          val binsArr = new Array[Byte](cap * nf)
+          val labels = new Array[Float](cap * nLabels)
+          val weights = new Array[Float](cap)
+          val margins = new Array[Float](cap * k)
+          var n = 0
+          while (it.hasNext && n < cap) {
+            val (f, ys, w, bm) = it.next()
+            val rb = bins.binRow(f)
+            System.arraycopy(rb, 0, binsArr, n * nf, nf)
+            System.arraycopy(ys, 0, labels, n * nLabels, nLabels)
+            weights(n) = w
+            val m0 = if (bm.isNaN) init else bm
+            java.util.Arrays.fill(margins, n * k, n * k + k, m0)
+            n += 1
+          }
+          new TrainBlock(n, nf, k,
+            java.util.Arrays.copyOf(binsArr, n * nf),
+            java.util.Arrays.copyOf(labels, n * nLabels),
+            java.util.Arrays.copyOf(weights, n), null, null,
+            java.util.Arrays.copyOf(margins, n * k))
+        }
+      }
+    }, preservesPartitioning = true)
+      .persist(params.storageLevel)
+    blocks.foreachPartition(_ => ()) // materialize bytes, drop floats
+    if (cachePrepared) rows.unpersist(blocking = false)
+    (blocks, bins, totalRows)
   }
 
   /** Append one `prediction_<label>` column per trained label. */
@@ -520,11 +538,12 @@ object GraftBoost {
   /**
    * Train ONE vector-leaf tree per round over all label columns — the
    * xgboost 2.x `multi_strategy = "multi_output_tree"` analog (see
-   * [[graft.learner.MultiOutput]] for semantics and v1 scope). Same
-   * prepare→bin→pack pipeline as [[trainMultiLabel]]'s fast path (one
-   * data pass assembles all L labels), but training then costs one
-   * histogram pass per level TOTAL instead of one per label, and the
-   * model is L× smaller (shared split structure).
+   * [[graft.learner.MultiOutput]] for semantics and scope). The same
+   * one-pass pack as [[trainMultiLabel]]'s fast path, with one margin
+   * per label; [[Trainer]]'s round loop then grows each round's L
+   * per-target trees as one tie group sharing every split, so training
+   * costs one histogram job per level TOTAL instead of one per label,
+   * and the model is L× smaller (shared split structure).
    */
   def trainMultiOutput(
       df: DataFrame,
@@ -545,49 +564,19 @@ object GraftBoost {
     MultiOutput.checkParams(params, obj)
     spec.validate(df, requireLabel = true)
     val catFlags = spec.categoricalFlags(df)
+    require(!catFlags.contains(true),
+      "multi_output_tree: categorical features are not supported " +
+        "(xgboost 2.x's vector-leaf strategy carries the same " +
+        "limits); train per-label via trainMultiLabel instead")
     val kOut = spec.labelCol.size
-    val init = obj.initMargin(params.baseScore)
-    val multiRows = prepareMulti(df, spec, numWorkers)
-    val totalRows = df.count()
-    val bins = Binner.fit(multiRows.map(_._1), totalRows,
-      params.maxBins, seed = params.seed + 42, catFeatures = catFlags,
-      knownWidth = spec.featureWidth(df))
-    val blocks = multiRows.mapPartitions({ it0 =>
-      val it = it0.buffered
-      val nf = bins.numFeatures
-      val cap = graft.learner.TrainBlock.capacity(nf, kOut)
-      new Iterator[MultiOutput.MoBlock] {
-        def hasNext: Boolean = it.hasNext
-        def next(): MultiOutput.MoBlock = {
-          val binsArr = new Array[Byte](cap * nf)
-          val labels = new Array[Float](cap * kOut)
-          val weights = new Array[Float](cap)
-          val margins = new Array[Float](cap * kOut)
-          var n = 0
-          while (it.hasNext && n < cap) {
-            val (f, ys, w, bm) = it.next()
-            val rb = bins.binRow(f)
-            System.arraycopy(rb, 0, binsArr, n * nf, nf)
-            var j = 0
-            while (j < kOut) { labels(n * kOut + j) = ys(j); j += 1 }
-            weights(n) = w
-            val m0 = if (bm.isNaN) init else bm
-            java.util.Arrays.fill(margins, n * kOut, n * kOut + kOut, m0)
-            n += 1
-          }
-          new MultiOutput.MoBlock(n, nf, kOut,
-            java.util.Arrays.copyOf(binsArr, n * nf),
-            java.util.Arrays.copyOf(labels, n * kOut),
-            java.util.Arrays.copyOf(weights, n),
-            java.util.Arrays.copyOf(margins, n * kOut))
-        }
-      }
-    }, preservesPartitioning = true)
-      .persist(params.storageLevel)
-    blocks.foreachPartition(_ => ())
+    val (blocks, bins, totalRows) = packMulti(df, spec, params, catFlags,
+      kOut, obj.initMargin(params.baseScore), numWorkers)
     try {
-      val trees = MultiOutput.boost(blocks, bins, params, kOut)
-      MultiOutput.MultiOutputModel(trees, kOut, obj.name,
+      val res = Trainer.boostRounds(blocks, Nil, bins, params, Nil, None,
+        None, Nil, releaseInputs = false, knownRows = totalRows,
+        targets = kOut)
+      MultiOutput.MultiOutputModel(
+        MultiOutput.fromTied(res.model.trees, kOut), kOut, obj.name,
         params.baseScore, bins.numFeatures, spec.labelCol)
     } finally blocks.unpersist(blocking = false)
   }

@@ -1,8 +1,5 @@
 package graft.learner
 
-import org.apache.spark.rdd.RDD
-import scala.collection.mutable.ArrayBuffer
-
 /**
  * Multi-output trees — the xgboost 2.x
  * `multi_strategy = "multi_output_tree"` analog (the one modern
@@ -14,49 +11,28 @@ import scala.collection.mutable.ArrayBuffer
  * targets; leaves fit each target independently given that structure.
  * Contrast [[graft.api.GraftBoost.trainMultiLabel]] (one full model
  * per label — xgboost's `one_output_per_tree` strategy): K targets
- * cost ONE histogram pass per level here instead of K, and the model
+ * cost ONE histogram job per level here instead of K, and the model
  * is K× smaller, at the price of shared split structure.
  *
- * Scale shape: identical to [[Trainer]] — per level, ONE
- * treeAggregate of per-partition histograms over cached binned
- * blocks; the histogram is 2K doubles per (node, feature, bin), so
- * the allreduce volume grows K× but the DATA passes do not. No
- * shuffle of rows, ever; margins advance block-locally.
+ * Training is [[Trainer]]'s own round loop: blocks carry K labels and
+ * K margins per row, the scalar objective applies per target, and each
+ * round grows the K per-target trees as one TIE GROUP
+ * ([[Trainer]].buildTrees) — one split decision per node with gain
+ * ½·(Σ_j score_L,j + Σ_j score_R,j − Σ_j score_P,j) − γ and
+ * `min_child_weight` against the mean hessian, per-target leaves
+ * −η·T_α(G_j)/(H_j+λ). This object holds only the model types, the
+ * parameter limits and [[fromTied]], which folds a round's K tied
+ * trees into one [[MoTree]]. The closed-form `ml_stump_multiout` and
+ * `ml_train_multiout` oracles pin the arithmetic.
  *
- * Formula parity with [[Trainer]] (pinned by the closed-form
- * `ml_stump_multiout` oracle): per target j, leaf_j =
- * −η·T_α(G_j)/(H_j+λ) with the exact same operation order; split
- * gain = ½·Σ_j (score_L,j + score_R,j − score_P,j) − γ (the vector
- * loss is the SUM of per-target losses, so its gain is the sum of
- * per-target gains); `min_child_weight` compares against the MEAN
- * hessian across targets (equal to every target's hessian for
- * identical-hessian objectives like squared error, where each row
- * contributes its weight to every target).
- *
- * v1 scope (mirrors xgboost 2.x's own vector-leaf limits): pointwise
- * scalar objectives applied per target (reg:*, binary:*), numeric
- * features, depthwise growth, no row/column subsampling, no
- * monotone/interaction constraints, gbtree only. Everything outside
- * that scope fails loudly at entry.
+ * Scope (mirrors xgboost 2.x's own vector-leaf limits): pointwise
+ * scalar objectives applied per target (reg:*, binary:*) without
+ * adaptive leaves, numeric features, depthwise growth, no row/column
+ * subsampling, no monotone/interaction constraints, gbtree only, no
+ * round checkpoints. Everything outside that scope fails loudly at
+ * entry.
  */
 object MultiOutput {
-
-  import Binner.MissingBin
-
-  /** Columnar block for vector-target training: the [[TrainBlock]]
-    * layout with K labels AND K margins per row (both row-major,
-    * stride K). */
-  final class MoBlock(
-      val n: Int,
-      val nf: Int,
-      val k: Int,
-      val bins: Array[Byte],
-      val labels: Array[Float],
-      val weights: Array[Float],
-      val margins: Array[Float]) extends Serializable {
-    def withMargins(m: Array[Float]): MoBlock =
-      new MoBlock(n, nf, k, bins, labels, weights, m)
-  }
 
   /**
    * One vector-leaf regression tree: [[RegTree]]'s flat-array layout
@@ -98,21 +74,6 @@ object MultiOutput {
       new RegTree(feature, thresholdBin, threshold, defaultLeft,
         left, right, v, gain, cover)
     }
-
-    /** Leaf node id for a binned row (the margin-advance router —
-      * same bin semantics as [[Trainer]]'s PartialTree route). */
-    def leafOf(rb: Array[Byte], off: Int): Int = {
-      var nid = 0
-      while (feature(nid) >= 0) {
-        val b = rb(off + feature(nid)) & 0xFF
-        nid =
-          if (b == MissingBin) {
-            if (defaultLeft(nid)) left(nid) else right(nid)
-          } else if (b <= thresholdBin(nid)) left(nid)
-          else right(nid)
-      }
-      nid
-    }
   }
 
   /**
@@ -133,40 +94,12 @@ object MultiOutput {
 
     def sliceModel(j: Int): GraftModel =
       new GraftModel(trees.map(_.slice(j)).toArray, objective, 0,
-        baseScore, MissingBin, numFeatures)
-  }
-
-  // Trainer's leaf/score arithmetic is THE bit-exact contract the
-  // stump oracles replay ((−η·T(G))/(H+λ), exact operation order) —
-  // shared, not copied, so the scalar and vector trainers can never
-  // desynchronize (review r20)
-  private def leafWeight(g: Double, h: Double, p: TrainParams): Double =
-    Trainer.leafWeight(g, h, p)
-  private def score(g: Double, h: Double, p: TrainParams): Double =
-    Trainer.score(g, h, p)
-
-  /** Broadcastable in-progress tree (structure only). */
-  private final case class MoPartial(feature: Array[Int],
-      thresholdBin: Array[Int], defaultLeft: Array[Boolean],
-      left: Array[Int], right: Array[Int], slotOf: Array[Int])
-
-  private def route(pt: MoPartial, rb: Array[Byte], off: Int): Int = {
-    var nid = 0
-    while (pt.feature(nid) >= 0) {
-      val b = rb(off + pt.feature(nid)) & 0xFF
-      nid =
-        if (b == MissingBin) {
-          if (pt.defaultLeft(nid)) pt.left(nid) else pt.right(nid)
-        } else if (b <= pt.thresholdBin(nid)) pt.left(nid)
-        else pt.right(nid)
-    }
-    nid
+        baseScore, Binner.MissingBin, numFeatures)
   }
 
   /** Param-only validation — callable BEFORE any data scan, so an
     * unsupported knob fails in milliseconds, not after prepare/bin/
-    * pack of a 100 TB input (review r20). The bins-dependent
-    * categorical check is the one that must wait for the binner. */
+    * pack of a 100 TB input (review r20). */
   private[graft] def checkParams(p: TrainParams, obj: Objective): Unit = {
     def no(cond: Boolean, what: String): Unit = require(cond,
       s"multi_output_tree: $what is not supported (xgboost 2.x's " +
@@ -175,6 +108,8 @@ object MultiOutput {
     no(!obj.needsGroups && !obj.needsBounds && !obj.needsGlobalPass,
       s"objective ${obj.name}")
     no(obj.numOutputs == 1, s"multi-class objective ${obj.name}")
+    no(obj.leafRefreshAlphas.isEmpty,
+      s"adaptive-leaf objective ${obj.name}")
     no(p.subsample >= 1.0, "subsample < 1")
     no(p.colsampleByTree >= 1.0 && p.colsampleByLevel >= 1.0 &&
       p.colsampleByNode >= 1.0, "colsample_by* < 1")
@@ -186,343 +121,28 @@ object MultiOutput {
     no(p.monotoneConstraints.forall(_ == 0), "monotone_constraints")
     no(p.interactionConstraints.isEmpty, "interaction_constraints")
     no(p.quantileAlphas.isEmpty, "vector quantile_alpha")
+    // the round checkpoint saves a GraftModel, not a MultiOutputModel
+    no(p.checkpointEvery == 0 && p.checkpointPath.isEmpty,
+      "checkpointEvery/checkpointPath")
     require(p.maxDepth >= 1,
       s"multi_output_tree: maxDepth must be >= 1, got ${p.maxDepth}")
   }
 
-  private def checkSupported(p: TrainParams, obj: Objective,
-      bins: Binner.Bins): Unit = {
-    checkParams(p, obj)
-    require(!bins.cat.exists(identity),
-      "multi_output_tree: categorical features are not supported " +
-        "(xgboost 2.x's vector-leaf strategy carries the same " +
-        "limits); train per-label via trainMultiLabel instead")
-  }
-
-  /**
-   * Boost `numRounds` vector-leaf trees over cached [[MoBlock]]s.
-   * The caller owns `blocks0`'s persistence; per-round margin
-   * generations are persisted/released here (the [[Trainer.boost]]
-   * discipline, simplified — no DART/refresh/eval surface in v1).
-   */
-  def boost(blocks0: RDD[MoBlock], bins: Binner.Bins,
-      p: TrainParams, k: Int): Seq[MoTree] = {
-    val obj = Objectives.resolve(p)
-    checkSupported(p, obj, bins)
-    require(k >= 2, s"multi_output_tree needs >= 2 targets, got $k")
-    val sc = blocks0.sparkContext
-    val trees = ArrayBuffer[MoTree]()
-    // margin-advance broadcasts stay alive until boosting ends: a
-    // persisted generation's LINEAGE closure still references its
-    // broadcast, and Spark serializes the full task binary (closure
-    // included) even for cache hits — destroying early throws
-    // INTERNAL_ERROR_BROADCAST on the next round's job (the same
-    // deferred-destroy discipline as Trainer.boost's `broadcasts`
-    // buffer; the per-level histogram broadcasts in buildTree ARE
-    // destroyed eagerly — nothing retains those closures)
-    val bcs = ArrayBuffer[org.apache.spark.broadcast.Broadcast[MoTree]]()
-    var cur = blocks0
-    var curOwned = false
-    var round = 0
-    while (round < p.numRounds) {
-      val grads = gradients(cur, obj, k)
-      val tree = buildTree(grads, bins, p, k)
-      trees += tree
-      if (round < p.numRounds - 1) {
-        val bc = sc.broadcast(tree)
-        bcs += bc
-        val next = cur.mapPartitions({ it =>
-          val t = bc.value
-          it.map { blk =>
-            val m2 = blk.margins.clone()
-            var i = 0
-            while (i < blk.n) {
-              val leaf = t.leafOf(blk.bins, i * blk.nf)
-              var j = 0
-              while (j < k) {
-                m2(i * k + j) += t.values(leaf * k + j); j += 1
-              }
-              i += 1
-            }
-            blk.withMargins(m2)
-          }
-        }, preservesPartitioning = true)
-        next.persist(p.storageLevel)
-        // lineage truncation every 50 rounds (the Trainer.boost rule):
-        // without it a long training's recompute chain grows linearly
-        // with rounds. The broadcasts still live to end-of-boost —
-        // the checkpointed RDD's object graph keeps its closure, and
-        // Spark serializes that graph with every later task, so a
-        // destroyed broadcast throws at task-serialization time even
-        // when the checkpoint means it can never be COMPUTED again
-        // (probed: early destroy after the checkpoint fails exactly
-        // there). Trees are KB-sized — O(rounds) tree broadcasts is
-        // the same end-of-boost accounting Trainer.boost keeps.
-        if ((round + 1) % 50 == 0) next.localCheckpoint()
-        next.foreachPartition(_ => ())
-        if (curOwned) cur.unpersist(blocking = false)
-        cur = next
-        curOwned = true
-      }
-      round += 1
-    }
-    if (curOwned) cur.unpersist(blocking = false)
-    bcs.foreach(b => scala.util.Try(b.destroy()))
-    trees.toSeq
-  }
-
-  /** Per-target gradients via the scalar objective: target j's (g, h)
-    * from its own (margin_j, label_j), row-weighted — reusing
-    * [[GradBlock]]'s stride-2K layout (salts unused: no subsampling
-    * in v1). */
-  private def gradients(data: RDD[MoBlock], obj: Objective,
-      k: Int): RDD[GradBlock] =
-    data.mapPartitions({ it =>
-      val m1 = new Array[Float](1)
-      val g1 = new Array[Float](1)
-      val h1 = new Array[Float](1)
-      it.map { b =>
-        val gh = new Array[Float](b.n * 2 * k)
-        var i = 0
-        while (i < b.n) {
-          val w = b.weights(i)
-          var j = 0
-          while (j < k) {
-            m1(0) = b.margins(i * k + j)
-            obj.gradHess(m1, b.labels(i * k + j), g1, h1)
-            gh(i * 2 * k + 2 * j) = g1(0) * w
-            gh(i * 2 * k + 2 * j + 1) = h1(0) * w
-            j += 1
-          }
-          i += 1
-        }
-        new GradBlock(b.n, b.nf, k, b.bins, gh, null)
-      }
-    }, preservesPartitioning = true)
-
-  private def buildTree(grads: RDD[GradBlock], bins: Binner.Bins,
-      p: TrainParams, k: Int): MoTree = {
-    val sc = grads.sparkContext
-    val b = bins.maxRealBins + 1 // last slot = missing
-    val nf = bins.numFeatures
-
-    // growable node arrays (the TreeState shape, vector stats)
-    val feature = ArrayBuffer[Int]()
-    val thresholdBin = ArrayBuffer[Int]()
-    val threshold = ArrayBuffer[Float]()
-    val defaultLeft = ArrayBuffer[Boolean]()
-    val left = ArrayBuffer[Int]()
-    val right = ArrayBuffer[Int]()
-    val gainArr = ArrayBuffer[Double]()
-    val sumG = ArrayBuffer[Array[Double]]()
-    val sumH = ArrayBuffer[Array[Double]]()
-
-    def newNode(g: Array[Double], h: Array[Double]): Int = {
-      feature += -2; thresholdBin += -1; threshold += 0f
-      defaultLeft += false; left += -1; right += -1; gainArr += 0.0
-      sumG += g; sumH += h
-      feature.length - 1
-    }
-
-    newNode(null, null) // root; stats land with its first histogram
-
-    var frontier: List[Int] = List(0)
-    var depth = 0
-    while (depth < p.maxDepth && frontier.nonEmpty) {
-      val next = ArrayBuffer[Int]()
-      // chunk the frontier so one histogram buffer stays bounded
-      // (the evaluateWork maxHistBytes rule, 2K doubles per bin)
-      val bytesPerNode = nf.toLong * b * 2 * k * 8
-      val chunkSize = math.max(1, (p.maxHistBytes / bytesPerNode).toInt)
-      frontier.grouped(chunkSize).foreach { chunk =>
-        val slotOf = Array.fill(feature.length)(-1)
-        chunk.zipWithIndex.foreach { case (nid, s) => slotOf(nid) = s }
-        val bc = sc.broadcast(MoPartial(feature.toArray,
-          thresholdBin.toArray, defaultLeft.toArray, left.toArray,
-          right.toArray, slotOf))
-        val histSize = chunk.length * nf * b * 2 * k
-        val seqOp = (acc: Array[Double], blk: GradBlock) => {
-          val pt = bc.value
-          val rb = blk.bins
-          val gh = blk.gh
-          var i = 0
-          while (i < blk.n) {
-            val off = i * nf
-            val slot = pt.slotOf(route(pt, rb, off))
-            if (slot >= 0) {
-              var f = 0
-              while (f < nf) {
-                val bi = rb(off + f) & 0xFF
-                val slotBin = if (bi == MissingBin) b - 1 else bi
-                val idx = ((slot * nf + f) * b + slotBin) * 2 * k
-                var j = 0
-                while (j < k) {
-                  acc(idx + 2 * j) += gh(i * 2 * k + 2 * j)
-                  acc(idx + 2 * j + 1) += gh(i * 2 * k + 2 * j + 1)
-                  j += 1
-                }
-                f += 1
-              }
-            }
-            i += 1
-          }
-          acc
-        }
-        val combOp = (a: Array[Double], c: Array[Double]) => {
-          var i = 0
-          while (i < a.length) { a(i) += c(i); i += 1 }
-          a
-        }
-        val mergeBytes = histSize.toLong * 8L * grads.getNumPartitions
-        val hist =
-          if (mergeBytes < (64L << 20))
-            grads.aggregate(new Array[Double](histSize))(seqOp, combOp)
-          else grads.treeAggregate(new Array[Double](histSize))(
-            seqOp, combOp, depth = 2)
-        bc.destroy()
-
-        chunk.zipWithIndex.foreach { case (nid, s) =>
-          // node totals from feature 0's column (all bins + missing)
-          if (sumG(nid) == null) {
-            val g = new Array[Double](k); val h = new Array[Double](k)
-            val base = (s * nf) * b * 2 * k
-            var bi = 0
-            while (bi < b) {
-              var j = 0
-              while (j < k) {
-                g(j) += hist(base + bi * 2 * k + 2 * j)
-                h(j) += hist(base + bi * 2 * k + 2 * j + 1)
-                j += 1
-              }
-              bi += 1
-            }
-            sumG(nid) = g; sumH(nid) = h
-          }
-          val gT = sumG(nid); val hT = sumH(nid)
-          var parentScore = 0.0
-          var hTot = 0.0
-          var j = 0
-          while (j < k) {
-            parentScore += score(gT(j), hT(j), p); hTot += hT(j)
-            j += 1
-          }
-          val hMean = hTot / k
-
-          var bestGain = 0.0
-          var bestF = -1; var bestBin = -1; var bestDefLeft = false
-          var bestGL: Array[Double] = null
-          var bestHL: Array[Double] = null
-
-          val gl = new Array[Double](k)
-          val hl = new Array[Double](k)
-          val glA = new Array[Double](k)
-          val hlA = new Array[Double](k)
-          var f = 0
-          while (f < nf) {
-            val base = ((s * nf + f) * b) * 2 * k
-            val missBase = base + (b - 1) * 2 * k
-            java.util.Arrays.fill(gl, 0.0)
-            java.util.Arrays.fill(hl, 0.0)
-            val nb = bins.numBins(f)
-            var bi = 0
-            while (bi < nb - 1) {
-              var hlSum = 0.0; var hlASum = 0.0
-              var jj = 0
-              while (jj < k) {
-                gl(jj) += hist(base + bi * 2 * k + 2 * jj)
-                hl(jj) += hist(base + bi * 2 * k + 2 * jj + 1)
-                glA(jj) = gl(jj) + hist(missBase + 2 * jj)
-                hlA(jj) = hl(jj) + hist(missBase + 2 * jj + 1)
-                hlSum += hl(jj); hlASum += hlA(jj)
-                jj += 1
-              }
-              // missing → left
-              if (hlASum / k >= p.minChildWeight &&
-                  hMean - hlASum / k >= p.minChildWeight) {
-                var sL = 0.0; var sR = 0.0
-                jj = 0
-                while (jj < k) {
-                  sL += score(glA(jj), hlA(jj), p)
-                  sR += score(gT(jj) - glA(jj), hT(jj) - hlA(jj), p)
-                  jj += 1
-                }
-                val gain = 0.5 * (sL + sR - parentScore) - p.gamma
-                if (gain > bestGain + 1e-12) {
-                  bestGain = gain; bestF = f; bestBin = bi
-                  bestDefLeft = true
-                  bestGL = glA.clone(); bestHL = hlA.clone()
-                }
-              }
-              // missing → right
-              if (hlSum / k >= p.minChildWeight &&
-                  hMean - hlSum / k >= p.minChildWeight) {
-                var sL = 0.0; var sR = 0.0
-                jj = 0
-                while (jj < k) {
-                  sL += score(gl(jj), hl(jj), p)
-                  sR += score(gT(jj) - gl(jj), hT(jj) - hl(jj), p)
-                  jj += 1
-                }
-                val gain = 0.5 * (sL + sR - parentScore) - p.gamma
-                if (gain > bestGain + 1e-12) {
-                  bestGain = gain; bestF = f; bestBin = bi
-                  bestDefLeft = false
-                  bestGL = gl.clone(); bestHL = hl.clone()
-                }
-              }
-              bi += 1
-            }
-            f += 1
-          }
-
-          if (bestF >= 0) {
-            val gR = new Array[Double](k); val hR = new Array[Double](k)
-            var jj = 0
-            while (jj < k) {
-              gR(jj) = gT(jj) - bestGL(jj)
-              hR(jj) = hT(jj) - bestHL(jj)
-              jj += 1
-            }
-            val l = newNode(bestGL, bestHL)
-            val r = newNode(gR, hR)
-            feature(nid) = bestF
-            thresholdBin(nid) = bestBin
-            threshold(nid) = bins.cuts(bestF)(bestBin)
-            defaultLeft(nid) = bestDefLeft
-            left(nid) = l; right(nid) = r
-            gainArr(nid) = bestGain
-            next += l; next += r
-          } else feature(nid) = -1 // no admissible split: leaf
-        }
-      }
-      frontier = next.toList
-      depth += 1
-    }
-    frontier.foreach(nid => feature(nid) = -1)
-
-    // every materialized node carries its would-be leaf vector (the
-    // TreeState.result rule: Saabas contribution walks need a value
-    // at internal nodes too)
-    val n = feature.length
-    val values = new Array[Float](n * k)
-    val cover = new Array[Float](n)
-    var i = 0
-    while (i < n) {
-      val g = sumG(i); val h = sumH(i)
-      if (g != null) {
-        var hSum = 0.0
+  /** Fold each round's `k` tied trees (target-inner, as
+    * [[Trainer]].boostRounds lays them out) into one [[MoTree]]. The
+    * members share structure, gain and the mean-hessian cover, so the
+    * first member supplies them; only the values interleave. */
+  private[graft] def fromTied(trees: Array[RegTree], k: Int): Seq[MoTree] =
+    trees.grouped(k).map { grp =>
+      val t = grp(0)
+      val values = new Array[Float](t.numNodes * k)
+      var i = 0
+      while (i < t.numNodes) {
         var j = 0
-        while (j < k) {
-          values(i * k + j) = leafWeight(g(j), h(j), p).toFloat
-          hSum += h(j)
-          j += 1
-        }
-        cover(i) = (hSum / k).toFloat
+        while (j < k) { values(i * k + j) = grp(j).value(i); j += 1 }
+        i += 1
       }
-      i += 1
-    }
-    new MoTree(feature.toArray, thresholdBin.toArray,
-      threshold.toArray, defaultLeft.toArray, left.toArray,
-      right.toArray, values, gainArr.toArray.map(_.toFloat), cover, k)
-  }
+      new MoTree(t.feature, t.thresholdBin, t.threshold, t.defaultLeft,
+        t.left, t.right, values, t.gain, t.cover, k)
+    }.toSeq
 }

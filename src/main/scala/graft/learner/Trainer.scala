@@ -385,7 +385,9 @@ object Trainer {
       value(i) = clamp(leafWeight(sumG(i), sumH(i), params), i).toFloat
     }
 
-    def result(p: TrainParams): RegTree = {
+    /** `cover` overrides the per-node hessian sums (a tie group's
+      * shared mean-hessian cover); null keeps them. */
+    def result(p: TrainParams, cover: Array[Float] = null): RegTree = {
       // internal nodes carry their would-be leaf weight too: the
       // Saabas contribution walk (GraftModel.contribs) attributes
       // v(child) − v(parent) per split, so v must exist at every node.
@@ -401,7 +403,8 @@ object Trainer {
       new RegTree(feature.toArray, thresholdBin.toArray,
         threshold.toArray, defaultLeft.toArray, left.toArray,
         right.toArray, value.toArray, gain.toArray.map(_.toFloat),
-        sumH.toArray.map(_.toFloat), // cover = hessian sum through node
+        // cover = hessian sum through node
+        if (cover != null) cover else sumH.toArray.map(_.toFloat),
         if (catSplit.contains(true)) catSplit.toArray else Array.empty,
         if (catBits.exists(_ != null)) catBits.toArray else Array.empty)
     }
@@ -506,32 +509,40 @@ object Trainer {
         val rng = new java.util.Random(mix(seed, round, pid))
         it.map { b =>
           val n = b.n
-          val gh = new Array[Float](n * 2 * k)
+          // targets per row: a block wider than the objective carries
+          // one label per margin slot (multi-output trees), and the
+          // objective applies to each (margins, label) target in turn
+          val tpr = b.k / k
+          val gh = new Array[Float](n * 2 * b.k)
           val salts = new Array[Int](n)
           val g = new Array[Float](k); val h = new Array[Float](k)
           val m = new Array[Float](k)
           var i = 0
           while (i < n) {
-            var c = 0
-            while (c < k) { m(c) = b.margins(i * k + c); c += 1 }
-            val y = b.labels(i)
-            if (aux != null) obj.gradHessGlobal(aux, m, y, g, h)
-            else if (obj.needsBounds)
-              obj.gradHessBounds(m, y, b.upper(i), g, h)
-            else obj.gradHess(m, y, g, h)
-            val w =
-              if (spw != 1.0f && y == 1.0f) b.weights(i) * spw
-              else b.weights(i)
-            c = 0
-            while (c < k) {
-              gh(i * 2 * k + 2 * c) = g(c) * w
-              gh(i * 2 * k + 2 * c + 1) = h(c) * w
-              c += 1
+            var r = i * tpr
+            while (r < (i + 1) * tpr) {
+              var c = 0
+              while (c < k) { m(c) = b.margins(r * k + c); c += 1 }
+              val y = b.labels(r)
+              if (aux != null) obj.gradHessGlobal(aux, m, y, g, h)
+              else if (obj.needsBounds)
+                obj.gradHessBounds(m, y, b.upper(r), g, h)
+              else obj.gradHess(m, y, g, h)
+              val w =
+                if (spw != 1.0f && y == 1.0f) b.weights(i) * spw
+                else b.weights(i)
+              c = 0
+              while (c < k) {
+                gh(r * 2 * k + 2 * c) = g(c) * w
+                gh(r * 2 * k + 2 * c + 1) = h(c) * w
+                c += 1
+              }
+              r += 1
             }
             salts(i) = rng.nextInt()
             i += 1
           }
-          new GradBlock(n, b.nf, k, b.bins, gh, salts)
+          new GradBlock(n, b.nf, b.k, b.bins, gh, salts)
         }
       }, preservesPartitioning = true)
     } else {
@@ -619,10 +630,20 @@ object Trainer {
    * forest size, instead of once per level PER TREE (K× / forest-size×
    * fewer passes for softmax / RF presets). Work is chunked so one
    * aggregation buffer stays under maxHistBytes.
+   *
+   * Every `tie` consecutive trees form a TIE GROUP (multi-output
+   * targets, xgboost's `multi_output_tree`): the members share one
+   * split decision per node — gain ½·(Σ_j score_L,j + Σ_j score_R,j −
+   * Σ_j score_P,j) − γ summed in member order, `min_child_weight`
+   * against the mean hessian — while each keeps its own G/H and leaf
+   * values, and all share the group's mean-hessian cover. A work item
+   * is one (group, node) owning `tie` histogram slots, so the per-row
+   * histogram pass is the same for any `tie`; `tie` = 1 grows every
+   * tree independently. Groups grow depthwise over numeric features.
    */
   private def buildTrees(grads: RDD[GradBlock],
       bins: Binner.Bins, p: TrainParams, treeSeeds: Array[Long],
-      classes: Array[Int]): Array[RegTree] = {
+      classes: Array[Int], tie: Int = 1): Array[RegTree] = {
     // per-tree deterministic row subsample threshold on the row salt
     val subsampleCut: Int =
       if (p.subsample >= 1.0) Int.MaxValue
@@ -634,6 +655,7 @@ object Trainer {
       new TreeState(classes(i), treeSeeds(i), nf, p))
     val treeSalts = states.map(_.treeSalt)
     val treeCls = states.map(_.cls)
+    val nGroups = states.length / tie
 
     // interaction-constraint check: f may extend path P when some
     // group holds P ∪ {f}; path features themselves stay allowed, so
@@ -654,28 +676,114 @@ object Trainer {
         defLeft: Boolean, gL: Double, hL: Double,
         catSet: Array[Int] = null)
 
-    /** Evaluate a batch of frontier nodes — (tree, nid, sampled feats) —
+    /** Split scan for tie group `g` at node `nid` (histogram slots
+      * `slot0 + member`): numeric features, the per-member sums taken
+      * in member order. Writes one descriptor per member at `at +
+      * member`: the shared gain and split, each member's own child
+      * stats. Left null when no split is admissible. */
+    def scanGroup(g: Int, nid: Int, fl: Array[Int], slot0: Int,
+        fPerNode: Int, hist: Array[Double], out: Array[SplitDesc],
+        at: Int): Unit = {
+      val gT = Array.tabulate(tie)(m => states(g * tie + m).tb.sumG(nid))
+      val hT = Array.tabulate(tie)(m => states(g * tie + m).tb.sumH(nid))
+      var parentScore = 0.0
+      var hSum = 0.0
+      var m = 0
+      while (m < tie) {
+        parentScore += score(gT(m), hT(m), p); hSum += hT(m); m += 1
+      }
+      val hMean = hSum / tie
+      def gainOf(gL: Array[Double], hL: Array[Double]): Double = {
+        var sL = 0.0; var sR = 0.0
+        var m = 0
+        while (m < tie) {
+          sL += score(gL(m), hL(m), p)
+          sR += score(gT(m) - gL(m), hT(m) - hL(m), p)
+          m += 1
+        }
+        0.5 * (sL + sR - parentScore) - p.gamma
+      }
+      var bestGain = 0.0
+      var bestF = -1; var bestBin = -1; var bestDefLeft = false
+      val bestGL = new Array[Double](tie); val bestHL = new Array[Double](tie)
+      val gl = new Array[Double](tie); val hl = new Array[Double](tie)
+      val glA = new Array[Double](tie); val hlA = new Array[Double](tie)
+      var j = 0
+      while (j < fl.length) {
+        val f = fl(j)
+        java.util.Arrays.fill(gl, 0.0); java.util.Arrays.fill(hl, 0.0)
+        val nb = bins.numBins(f)
+        var bi = 0
+        while (bi < nb - 1) {
+          var hlSum = 0.0; var hlASum = 0.0
+          m = 0
+          while (m < tie) {
+            val base = ((slot0 + m) * fPerNode + j) * b * 2
+            val miss = base + (b - 1) * 2
+            gl(m) += hist(base + bi * 2); hl(m) += hist(base + bi * 2 + 1)
+            glA(m) = gl(m) + hist(miss); hlA(m) = hl(m) + hist(miss + 1)
+            hlSum += hl(m); hlASum += hlA(m)
+            m += 1
+          }
+          // missing → left
+          if (hlASum / tie >= p.minChildWeight &&
+              hMean - hlASum / tie >= p.minChildWeight) {
+            val gain = gainOf(glA, hlA)
+            if (gain > bestGain + 1e-12) {
+              bestGain = gain; bestF = f; bestBin = bi; bestDefLeft = true
+              System.arraycopy(glA, 0, bestGL, 0, tie)
+              System.arraycopy(hlA, 0, bestHL, 0, tie)
+            }
+          }
+          // missing → right
+          if (hlSum / tie >= p.minChildWeight &&
+              hMean - hlSum / tie >= p.minChildWeight) {
+            val gain = gainOf(gl, hl)
+            if (gain > bestGain + 1e-12) {
+              bestGain = gain; bestF = f; bestBin = bi; bestDefLeft = false
+              System.arraycopy(gl, 0, bestGL, 0, tie)
+              System.arraycopy(hl, 0, bestHL, 0, tie)
+            }
+          }
+          bi += 1
+        }
+        j += 1
+      }
+      if (bestF >= 0) {
+        m = 0
+        while (m < tie) {
+          out(at + m) = SplitDesc(bestGain, bestF, bestBin, cat = false,
+            bestDefLeft, bestGL(m), bestHL(m))
+          m += 1
+        }
+      }
+    }
+
+    /** Evaluate a batch of frontier nodes — (group, nid, sampled feats) —
       * with fused chunked histogram jobs; sets node stats; returns the
-      * best split per item (null = no admissible split). Deferring the
+      * best split per item and group member at `item * tie + member`
+      * (null = no admissible split). Deferring the
       * application is arithmetic-identical to the old apply-mid-batch
       * flow: items of one batch are never ancestors of each other, so
       * splitting one cannot change a sibling's routing or histogram. */
     def evaluateWork(work: ArrayBuffer[(Int, Int, Array[Int])])
         : Array[SplitDesc] = {
-      val out = new Array[SplitDesc](work.length)
+      val out = new Array[SplitDesc](work.length * tie)
       if (work.isEmpty) return out
       val fPerNode = work.map(_._3.length).max
-      val bytesPerNode = fPerNode.toLong * b * 2 * 8
+      val bytesPerNode = tie.toLong * fPerNode * b * 2 * 8
       val chunkSize = math.max(1, (p.maxHistBytes / bytesPerNode).toInt)
       var done = 0
       work.grouped(chunkSize).foreach { chunk =>
-        // per-tree node→global-slot maps for this chunk
+        // per-tree node→global-slot maps for this chunk: item s owns
+        // slots s*tie until (s+1)*tie, one per group member
         val slotOf = states.map(st => Array.fill(st.tb.feature.length)(-1))
-        chunk.zipWithIndex.foreach { case ((t, nid, _), s) =>
-          slotOf(t)(nid) = s
+        chunk.zipWithIndex.foreach { case ((g, nid, _), s) =>
+          var m = 0
+          while (m < tie) { slotOf(g * tie + m)(nid) = s * tie + m; m += 1 }
         }
         val chunkTrees = states.indices.map { t =>
-          if (chunk.exists(_._1 == t)) {
+          if (chunk.exists(_._1 == t / tie)) {
             val tb = states(t).tb
             PartialTree(tb.feature.toArray, tb.thresholdBin.toArray,
               tb.catSplit.toArray, tb.catBits.toArray,
@@ -684,8 +792,8 @@ object Trainer {
           } else null
         }.toArray
         val bc = sc.broadcast(LevelChunk(chunkTrees, treeCls, treeSalts,
-          chunk.map(_._3).toArray))
-        val histSize = chunk.length * fPerNode * b * 2
+          chunk.flatMap(w => Iterator.fill(tie)(w._3)).toArray))
+        val histSize = chunk.length * tie * fPerNode * b * 2
         val seqOp = (acc: Array[Double], blk: GradBlock) => {
           val ch = bc.value
           val nf2 = blk.nf
@@ -742,51 +850,144 @@ object Trainer {
             seqOp, combOp, depth = 2)
         bc.destroy()
 
-        // driver-side split finding per (tree, node) in this chunk
+        // driver-side split finding per (group, node) in this chunk
         chunk.zipWithIndex.foreach { case ((t, nid, fl), s) =>
-          val tb = states(t).tb
           // node totals from feature 0's column (all bins + missing)
-          if (tb.sumG(nid).isNaN) {
-            var g = 0.0; var h = 0.0
-            val base = (s * fPerNode) * b * 2
-            var bi = 0
-            while (bi < b) { g += hist(base + bi * 2); h += hist(base + bi * 2 + 1); bi += 1 }
-            tb.sumG(nid) = g; tb.sumH(nid) = h
-          }
-          val gTot = tb.sumG(nid); val hTot = tb.sumH(nid)
-          val parentScore = score(gTot, hTot, p)
-          var bestGain = 0.0
-          var bestF = -1; var bestBin = -1; var bestDefLeft = false
-          var bestGL = 0.0; var bestHL = 0.0; var bestCat = false
-          var bestCatSet: Array[Int] = null
-          val mc = p.monotoneConstraints
-          // a candidate split on a constrained feature must order its
-          // child weights in the constraint's direction
-          def monotoneOk(f: Int, gL: Double, hL: Double): Boolean = {
-            val c = if (f < mc.length) mc(f) else 0
-            if (c == 0) true
-            else {
-              val wl = leafWeight(gL, hL, p)
-              val wr = leafWeight(gTot - gL, hTot - hL, p)
-              if (c > 0) wl <= wr else wl >= wr
+          var m = 0
+          while (m < tie) {
+            val tm = states(t * tie + m).tb
+            if (tm.sumG(nid).isNaN) {
+              var g = 0.0; var h = 0.0
+              val base = ((s * tie + m) * fPerNode) * b * 2
+              var bi = 0
+              while (bi < b) { g += hist(base + bi * 2); h += hist(base + bi * 2 + 1); bi += 1 }
+              tm.sumG(nid) = g; tm.sumH(nid) = h
             }
+            m += 1
           }
-          var j = 0
-          while (j < fl.length) {
-            val f = fl(j)
-            val base = ((s * fPerNode + j) * b) * 2
-            val gMiss = hist(base + (b - 1) * 2)
-            val hMiss = hist(base + (b - 1) * 2 + 1)
-            val nb = bins.numBins(f)
-            if (bins.isCat(f) && nb < p.maxCatToOnehot) {
-              // one-hot categorical candidates: left = {code c}
-              // (matrix.py:142,159,800 enable_categorical), missing
-              // riding left or right like the numeric scan. Same
-              // O(bins) cost — gl/hl read one bin instead of a prefix.
-              var c = 0
-              while (c < nb) {
-                val gl = hist(base + c * 2)
-                val hl = hist(base + c * 2 + 1)
+          if (tie > 1) scanGroup(t, nid, fl, s * tie, fPerNode, hist, out,
+            (done + s) * tie)
+          else {
+            val tb = states(t).tb
+            val gTot = tb.sumG(nid); val hTot = tb.sumH(nid)
+            val parentScore = score(gTot, hTot, p)
+            var bestGain = 0.0
+            var bestF = -1; var bestBin = -1; var bestDefLeft = false
+            var bestGL = 0.0; var bestHL = 0.0; var bestCat = false
+            var bestCatSet: Array[Int] = null
+            val mc = p.monotoneConstraints
+            // a candidate split on a constrained feature must order its
+            // child weights in the constraint's direction
+            def monotoneOk(f: Int, gL: Double, hL: Double): Boolean = {
+              val c = if (f < mc.length) mc(f) else 0
+              if (c == 0) true
+              else {
+                val wl = leafWeight(gL, hL, p)
+                val wr = leafWeight(gTot - gL, hTot - hL, p)
+                if (c > 0) wl <= wr else wl >= wr
+              }
+            }
+            var j = 0
+            while (j < fl.length) {
+              val f = fl(j)
+              val base = ((s * fPerNode + j) * b) * 2
+              val gMiss = hist(base + (b - 1) * 2)
+              val hMiss = hist(base + (b - 1) * 2 + 1)
+              val nb = bins.numBins(f)
+              if (bins.isCat(f) && nb < p.maxCatToOnehot) {
+                // one-hot categorical candidates: left = {code c}
+                // (matrix.py:142,159,800 enable_categorical), missing
+                // riding left or right like the numeric scan. Same
+                // O(bins) cost — gl/hl read one bin instead of a prefix.
+                var c = 0
+                while (c < nb) {
+                  val gl = hist(base + c * 2)
+                  val hl = hist(base + c * 2 + 1)
+                  // missing → left
+                  val glA = gl + gMiss; val hlA = hl + hMiss
+                  if (hlA >= p.minChildWeight &&
+                      hTot - hlA >= p.minChildWeight) {
+                    val gain = 0.5 * (score(glA, hlA, p) +
+                      score(gTot - glA, hTot - hlA, p) - parentScore) - p.gamma
+                    if (gain > bestGain + 1e-12 && monotoneOk(f, glA, hlA)) {
+                      bestGain = gain; bestF = f; bestBin = c; bestCat = true
+                      bestDefLeft = true; bestGL = glA; bestHL = hlA
+                      bestCatSet = null
+                    }
+                  }
+                  // missing → right
+                  if (hl >= p.minChildWeight &&
+                      hTot - hl >= p.minChildWeight) {
+                    val gain = 0.5 * (score(gl, hl, p) +
+                      score(gTot - gl, hTot - hl, p) - parentScore) - p.gamma
+                    if (gain > bestGain + 1e-12 && monotoneOk(f, gl, hl)) {
+                      bestGain = gain; bestF = f; bestBin = c; bestCat = true
+                      bestDefLeft = false; bestGL = gl; bestHL = hl
+                      bestCatSet = null
+                    }
+                  }
+                  c += 1
+                }
+              } else if (bins.isCat(f)) {
+                // optimal-partition categorical (xgboost max_cat_to_onehot
+                // overflow): categories present at this node sorted by
+                // gradient ratio G_c/H_c (Fisher's exact grouping for
+                // second-order losses), then a prefix scan identical in
+                // shape to the numeric one — candidate left set = first
+                // j sorted categories, missing rides left or right.
+                // Deterministic: ties sort by code. Codes absent here
+                // (empty bins) join NEITHER side and route right at
+                // inference, like unseen categories.
+                val codes = (0 until nb).filter { c =>
+                  hist(base + c * 2) != 0.0 || hist(base + c * 2 + 1) != 0.0
+                }.toArray
+                if (codes.length >= 2) {
+                  val sorted = codes.sortBy { c =>
+                    val g = hist(base + c * 2)
+                    val h = hist(base + c * 2 + 1)
+                    (g / math.max(h, 1e-16), c)
+                  }
+                  var gl = 0.0; var hl = 0.0
+                  var ci = 0
+                  while (ci < sorted.length - 1) {
+                    val c = sorted(ci)
+                    gl += hist(base + c * 2); hl += hist(base + c * 2 + 1)
+                    // missing → left
+                    val glA = gl + gMiss; val hlA = hl + hMiss
+                    if (hlA >= p.minChildWeight &&
+                        hTot - hlA >= p.minChildWeight) {
+                      val gain = 0.5 * (score(glA, hlA, p) +
+                        score(gTot - glA, hTot - hlA, p) - parentScore) -
+                        p.gamma
+                      if (gain > bestGain + 1e-12 &&
+                          monotoneOk(f, glA, hlA)) {
+                        bestGain = gain; bestF = f; bestBin = -1
+                        bestCat = true; bestDefLeft = true
+                        bestGL = glA; bestHL = hlA
+                        bestCatSet = sorted.take(ci + 1).sorted
+                      }
+                    }
+                    // missing → right
+                    if (hl >= p.minChildWeight &&
+                        hTot - hl >= p.minChildWeight) {
+                      val gain = 0.5 * (score(gl, hl, p) +
+                        score(gTot - gl, hTot - hl, p) - parentScore) -
+                        p.gamma
+                      if (gain > bestGain + 1e-12 && monotoneOk(f, gl, hl)) {
+                        bestGain = gain; bestF = f; bestBin = -1
+                        bestCat = true; bestDefLeft = false
+                        bestGL = gl; bestHL = hl
+                        bestCatSet = sorted.take(ci + 1).sorted
+                      }
+                    }
+                    ci += 1
+                  }
+                }
+              } else {
+              var gl = 0.0; var hl = 0.0
+              var bi = 0
+              while (bi < nb - 1) {
+                gl += hist(base + bi * 2); hl += hist(base + bi * 2 + 1)
                 // missing → left
                 val glA = gl + gMiss; val hlA = hl + hMiss
                 if (hlA >= p.minChildWeight &&
@@ -794,114 +995,30 @@ object Trainer {
                   val gain = 0.5 * (score(glA, hlA, p) +
                     score(gTot - glA, hTot - hlA, p) - parentScore) - p.gamma
                   if (gain > bestGain + 1e-12 && monotoneOk(f, glA, hlA)) {
-                    bestGain = gain; bestF = f; bestBin = c; bestCat = true
+                    bestGain = gain; bestF = f; bestBin = bi
                     bestDefLeft = true; bestGL = glA; bestHL = hlA
-                    bestCatSet = null
+                    bestCat = false; bestCatSet = null
                   }
                 }
                 // missing → right
-                if (hl >= p.minChildWeight &&
-                    hTot - hl >= p.minChildWeight) {
+                if (hl >= p.minChildWeight && hTot - hl >= p.minChildWeight) {
                   val gain = 0.5 * (score(gl, hl, p) +
                     score(gTot - gl, hTot - hl, p) - parentScore) - p.gamma
                   if (gain > bestGain + 1e-12 && monotoneOk(f, gl, hl)) {
-                    bestGain = gain; bestF = f; bestBin = c; bestCat = true
+                    bestGain = gain; bestF = f; bestBin = bi
                     bestDefLeft = false; bestGL = gl; bestHL = hl
-                    bestCatSet = null
+                    bestCat = false; bestCatSet = null
                   }
                 }
-                c += 1
+                bi += 1
               }
-            } else if (bins.isCat(f)) {
-              // optimal-partition categorical (xgboost max_cat_to_onehot
-              // overflow): categories present at this node sorted by
-              // gradient ratio G_c/H_c (Fisher's exact grouping for
-              // second-order losses), then a prefix scan identical in
-              // shape to the numeric one — candidate left set = first
-              // j sorted categories, missing rides left or right.
-              // Deterministic: ties sort by code. Codes absent here
-              // (empty bins) join NEITHER side and route right at
-              // inference, like unseen categories.
-              val codes = (0 until nb).filter { c =>
-                hist(base + c * 2) != 0.0 || hist(base + c * 2 + 1) != 0.0
-              }.toArray
-              if (codes.length >= 2) {
-                val sorted = codes.sortBy { c =>
-                  val g = hist(base + c * 2)
-                  val h = hist(base + c * 2 + 1)
-                  (g / math.max(h, 1e-16), c)
-                }
-                var gl = 0.0; var hl = 0.0
-                var ci = 0
-                while (ci < sorted.length - 1) {
-                  val c = sorted(ci)
-                  gl += hist(base + c * 2); hl += hist(base + c * 2 + 1)
-                  // missing → left
-                  val glA = gl + gMiss; val hlA = hl + hMiss
-                  if (hlA >= p.minChildWeight &&
-                      hTot - hlA >= p.minChildWeight) {
-                    val gain = 0.5 * (score(glA, hlA, p) +
-                      score(gTot - glA, hTot - hlA, p) - parentScore) -
-                      p.gamma
-                    if (gain > bestGain + 1e-12 &&
-                        monotoneOk(f, glA, hlA)) {
-                      bestGain = gain; bestF = f; bestBin = -1
-                      bestCat = true; bestDefLeft = true
-                      bestGL = glA; bestHL = hlA
-                      bestCatSet = sorted.take(ci + 1).sorted
-                    }
-                  }
-                  // missing → right
-                  if (hl >= p.minChildWeight &&
-                      hTot - hl >= p.minChildWeight) {
-                    val gain = 0.5 * (score(gl, hl, p) +
-                      score(gTot - gl, hTot - hl, p) - parentScore) -
-                      p.gamma
-                    if (gain > bestGain + 1e-12 && monotoneOk(f, gl, hl)) {
-                      bestGain = gain; bestF = f; bestBin = -1
-                      bestCat = true; bestDefLeft = false
-                      bestGL = gl; bestHL = hl
-                      bestCatSet = sorted.take(ci + 1).sorted
-                    }
-                  }
-                  ci += 1
-                }
               }
-            } else {
-            var gl = 0.0; var hl = 0.0
-            var bi = 0
-            while (bi < nb - 1) {
-              gl += hist(base + bi * 2); hl += hist(base + bi * 2 + 1)
-              // missing → left
-              val glA = gl + gMiss; val hlA = hl + hMiss
-              if (hlA >= p.minChildWeight &&
-                  hTot - hlA >= p.minChildWeight) {
-                val gain = 0.5 * (score(glA, hlA, p) +
-                  score(gTot - glA, hTot - hlA, p) - parentScore) - p.gamma
-                if (gain > bestGain + 1e-12 && monotoneOk(f, glA, hlA)) {
-                  bestGain = gain; bestF = f; bestBin = bi
-                  bestDefLeft = true; bestGL = glA; bestHL = hlA
-                  bestCat = false; bestCatSet = null
-                }
-              }
-              // missing → right
-              if (hl >= p.minChildWeight && hTot - hl >= p.minChildWeight) {
-                val gain = 0.5 * (score(gl, hl, p) +
-                  score(gTot - gl, hTot - hl, p) - parentScore) - p.gamma
-                if (gain > bestGain + 1e-12 && monotoneOk(f, gl, hl)) {
-                  bestGain = gain; bestF = f; bestBin = bi
-                  bestDefLeft = false; bestGL = gl; bestHL = hl
-                  bestCat = false; bestCatSet = null
-                }
-              }
-              bi += 1
+              j += 1
             }
-            }
-            j += 1
+            if (bestF >= 0)
+              out(done + s) = SplitDesc(bestGain, bestF, bestBin, bestCat,
+                bestDefLeft, bestGL, bestHL, bestCatSet)
           }
-          if (bestF >= 0)
-            out(done + s) = SplitDesc(bestGain, bestF, bestBin, bestCat,
-              bestDefLeft, bestGL, bestHL, bestCatSet)
         }
         done += chunk.length
       }
@@ -966,15 +1083,31 @@ object Trainer {
       // within each level (xgboost hist's depthwise behavior); the
       // budget-free path applies in scan order, bit-identical to the
       // pre-maxLeaves trainer.
-      val leaves = Array.fill(states.length)(1)
+      // a group's members share structure, so its first tree's
+      // frontier, RNG and paths stand for the whole group
+      def finalizeGroup(g: Int, nid: Int): Unit = {
+        var m = 0
+        while (m < tie) { states(g * tie + m).tb.finalizeLeaf(nid, p); m += 1 }
+      }
+      def splitGroup(g: Int, nid: Int, descs: Array[SplitDesc],
+          i: Int): (Int, Int) = {
+        var lr = applySplit(g * tie, nid, descs(i * tie))
+        var m = 1
+        while (m < tie) {
+          lr = applySplit(g * tie + m, nid, descs(i * tie + m)); m += 1
+        }
+        lr
+      }
+      val leaves = Array.fill(nGroups)(1)
       var depth = 0
       while (depth < p.maxDepth && states.exists(_.active.nonEmpty)) {
-        // (treeIdx, nodeId, sampled features); per-tree RNG draw order is
+        // (group, nodeId, sampled features); per-tree RNG draw order is
         // identical to growing each tree separately. The interaction
         // filter runs AFTER sampling so the RNG sequence — and with it
         // the unconstrained model — is unchanged by the feature.
         val work = ArrayBuffer[(Int, Int, Array[Int])]()
-        states.zipWithIndex.foreach { case (st, t) =>
+        (0 until nGroups).foreach { t =>
+          val st = states(t * tie)
           if (st.active.nonEmpty) {
             val levelFeats = sampleFeatures(st.treeFeats, p.colsampleByLevel,
               p.featureWeights, st.rng)
@@ -987,7 +1120,7 @@ object Trainer {
               // no admissible feature: the node's stats are already known
               // (children get G/H at split time; only a root can be
               // stat-less, and a root has an empty path ⇒ never filtered)
-              if (feats.isEmpty) st.tb.finalizeLeaf(nid, p)
+              if (feats.isEmpty) finalizeGroup(t, nid)
               else work += ((t, nid, feats))
             }
           }
@@ -996,14 +1129,14 @@ object Trainer {
           states.foreach(_.active = Array.empty)
         } else {
           val descs = evaluateWork(work)
-          val nextActive = Array.fill(states.length)(ArrayBuffer[Int]())
+          val nextActive = Array.fill(nGroups)(ArrayBuffer[Int]())
           if (p.maxLeaves == 0) {
             var i = 0
             while (i < work.length) {
               val (t, nid, _) = work(i)
-              if (descs(i) == null) states(t).tb.finalizeLeaf(nid, p)
+              if (descs(i * tie) == null) finalizeGroup(t, nid)
               else {
-                val (l, r) = applySplit(t, nid, descs(i))
+                val (l, r) = splitGroup(t, nid, descs, i)
                 nextActive(t) += l; nextActive(t) += r
               }
               i += 1
@@ -1011,28 +1144,28 @@ object Trainer {
           } else {
             // leaf-budgeted level: apply best-gain-first (ties: scan
             // order), finalize what the budget can't afford
-            val order = descs.indices
-              .filter(descs(_) != null)
-              .sortBy(i => (-descs(i).gain, i))
+            val order = work.indices
+              .filter(i => descs(i * tie) != null)
+              .sortBy(i => (-descs(i * tie).gain, i))
             val applied = Array.fill(work.length)(false)
             order.foreach { i =>
               val (t, nid, _) = work(i)
               if (leaves(t) < p.maxLeaves) {
-                val (l, r) = applySplit(t, nid, descs(i))
+                val (l, r) = splitGroup(t, nid, descs, i)
                 leaves(t) += 1
                 nextActive(t) += l; nextActive(t) += r
                 applied(i) = true
               }
             }
-            descs.indices.foreach { i =>
+            work.indices.foreach { i =>
               if (!applied(i)) {
                 val (t, nid, _) = work(i)
-                states(t).tb.finalizeLeaf(nid, p)
+                finalizeGroup(t, nid)
               }
             }
           }
           states.zipWithIndex.foreach { case (st, t) =>
-            st.active = nextActive(t).toArray
+            st.active = nextActive(t / tie).toArray
           }
         }
         depth += 1
@@ -1128,7 +1261,17 @@ object Trainer {
       // finalize here (every materialized node was closed above)
       states.foreach(_.active = Array.empty)
     }
-    states.map(_.tb.result(p))
+    if (tie == 1) states.map(_.tb.result(p))
+    else states.grouped(tie).flatMap { grp =>
+      // the group's one cover array: mean hessian across members,
+      // summed in double in member order
+      val cover = Array.tabulate(grp(0).tb.sumH.length) { i =>
+        var h = 0.0
+        grp.foreach(st => h += st.tb.sumH(i))
+        (h / tie).toFloat
+      }
+      grp.map(_.tb.result(p, cover))
+    }.toArray
   }
 
   /**
@@ -1380,7 +1523,27 @@ object Trainer {
       distributedCallbacks: Seq[DistributedCallback] = Nil,
       releaseInputs: Boolean = true,
       knownRows: Long = -1L)
-      : TrainResult = {
+      : TrainResult =
+    boostRounds(train, evals, bins, p, callbacks, initModel, spark,
+      distributedCallbacks, releaseInputs, knownRows, targets = 1)
+
+  /** [[boost]] over blocks carrying `targets` labels (and margins) per
+    * row under a single-output objective: each round grows one tie
+    * group of `targets` trees (see [[buildTrees]]) — the multi-output
+    * trainer behind [[MultiOutput]], whose `checkParams` the caller
+    * applies first. `targets` = 1 is [[boost]]. */
+  private[graft] def boostRounds(
+      train: RDD[TrainBlock],
+      evals: Seq[(String, RDD[TrainBlock])],
+      bins: Binner.Bins,
+      p: TrainParams,
+      callbacks: Seq[TrainingCallback],
+      initModel: Option[GraftModel],
+      spark: Option[org.apache.spark.sql.SparkSession],
+      distributedCallbacks: Seq[DistributedCallback],
+      releaseInputs: Boolean,
+      knownRows: Long,
+      targets: Int): TrainResult = {
     val inputSet = java.util.Collections.newSetFromMap(
       new java.util.IdentityHashMap[RDD[TrainBlock], java.lang.Boolean]())
     if (!releaseInputs) {
@@ -1427,7 +1590,8 @@ object Trainer {
       require(p.normalizeType == "tree" || p.normalizeType == "forest",
         s"normalizeType must be tree|forest, got '${p.normalizeType}'")
     }
-    val k = obj.numOutputs
+    // margin slots per row: the objective's outputs, or one per target
+    val k = obj.numOutputs * targets
     val trees = ArrayBuffer[RegTree]()
     initModel.foreach(m => trees ++= m.trees)
     // DART weight per tree — SAMPLING bookkeeping only ("weighted"
@@ -1655,7 +1819,7 @@ object Trainer {
       val nTrees = p.numParallelTree * k
       val builtTrees = buildTrees(grads, bins, pTree,
         Array.tabulate(nTrees)(i => mix(p.seed, startRound + round, 7919 + i)),
-        Array.tabulate(nTrees)(_ % k))
+        Array.tabulate(nTrees)(_ % k), tie = targets)
       // adaptive leaf refresh (xgboost UpdateTreeLeaf): the L1 family
       // resets each leaf to η·Q_α of its residuals before the commit
       // (α per output slot — multi-quantile trains one tree per α)
@@ -1800,7 +1964,7 @@ object Trainer {
       if (p.checkpointEvery > 0 && p.checkpointPath.isDefined &&
           (round + 1) % p.checkpointEvery == 0) {
         spark.foreach { s =>
-          currentModel(trees, obj, p, bins, dartWeights).save(s, p.checkpointPath.get)
+          currentModel(trees, obj, k, p, bins, dartWeights).save(s, p.checkpointPath.get)
         }
       }
 
@@ -1808,7 +1972,7 @@ object Trainer {
         val stopNow = cb match {
           case m: ModelAwareCallback => m.afterIterationWithModel(
             startRound + round, roundMetrics.toMap,
-            () => currentModel(trees, obj, p, bins, dartWeights))
+            () => currentModel(trees, obj, k, p, bins, dartWeights))
           case _ =>
             cb.afterIteration(startRound + round, roundMetrics.toMap)
         }
@@ -1877,7 +2041,7 @@ object Trainer {
     // all per-round results are materialized — the round broadcasts are
     // no longer reachable from any live lineage (advisor r1: leak)
     broadcasts.foreach(_.destroy())
-    TrainResult(currentModel(trees, obj, p, bins, dartWeights),
+    TrainResult(currentModel(trees, obj, k, p, bins, dartWeights),
       evalsResult.map { case (n, m) => (n, m) }.toMap, totalN, round,
       bestIteration = if (p.earlyStoppingRounds > 0) bestRound else -1,
       bestScore = if (p.earlyStoppingRounds > 0) bestScore else Double.NaN)
@@ -2325,7 +2489,7 @@ object Trainer {
   }
 
   private def currentModel(trees: ArrayBuffer[RegTree], obj: Objective,
-      p: TrainParams, bins: Binner.Bins,
+      k: Int, p: TrainParams, bins: Binner.Bins,
       dartWeights: ArrayBuffer[Double] = ArrayBuffer.empty): GraftModel =
     // the stored class count follows the OBJECTIVE, not the raw param:
     // a caller passing numClass = 2 with a single-output objective
@@ -2334,8 +2498,9 @@ object Trainer {
     // to a phantom class
     // numOutputs, not p.numClass: softmax has numOutputs == numClass,
     // but multi-quantile is a k-output REGRESSION with numClass unset
-    new GraftModel(trees.toArray, obj.name,
-      if (obj.numOutputs <= 1) 0 else obj.numOutputs, p.baseScore,
+    // (and a multi-output round has one output per target)
+    new GraftModel(trees.toArray, obj.name, if (k <= 1) 0 else k,
+      p.baseScore,
       MissingBin, bins.numFeatures, p.numParallelTree,
       // hard-stop rollback may leave more weights than kept trees —
       // the weight buffer is append-ordered, so truncate to match

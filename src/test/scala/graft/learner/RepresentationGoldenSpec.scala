@@ -284,4 +284,63 @@ class RepresentationGoldenSpec extends SparkTestBase {
       evals = Seq(("train", df)))
     assert(fingerprint(res) === "5955e1fb1fc8e9431d9055a7bdf1ca3a")
   }
+
+  // ---- multi-output pins: vector-leaf models, captured from the
+  // dedicated multi-output trainer before it merged into Trainer's
+  // tie-group growth, so the merge is proven bit-exact ----
+
+  /** SHA-256 over every [[MultiOutput.MoTree]] array bit-exact plus the
+    * model header. */
+  private def moFingerprint(m: MultiOutput.MultiOutputModel): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    val buf = new java.io.DataOutputStream(
+      new java.security.DigestOutputStream(
+        java.io.OutputStream.nullOutputStream(), md))
+    buf.writeUTF(m.objective); buf.writeInt(m.k)
+    buf.writeDouble(m.baseScore); buf.writeInt(m.numFeatures)
+    m.labelNames.foreach(buf.writeUTF)
+    m.trees.foreach { t =>
+      buf.writeInt(t.k)
+      t.feature.foreach(buf.writeInt)
+      t.thresholdBin.foreach(buf.writeInt)
+      t.threshold.foreach(v => buf.writeInt(JF.floatToIntBits(v)))
+      t.defaultLeft.foreach(buf.writeBoolean)
+      t.left.foreach(buf.writeInt); t.right.foreach(buf.writeInt)
+      t.values.foreach(v => buf.writeInt(JF.floatToIntBits(v)))
+      t.gain.foreach(v => buf.writeInt(JF.floatToIntBits(v)))
+      t.cover.foreach(v => buf.writeInt(JF.floatToIntBits(v)))
+    }
+    buf.flush()
+    md.digest().map("%02x".format(_)).mkString.take(32)
+  }
+
+  test("multi-output reg:squarederror, 2 targets over 3 partitions " +
+      "(multi-output fingerprint)") {
+    val rng = new scala.util.Random(161)
+    val df = (1 to 400).map { _ =>
+      val a = rng.nextDouble() * 4; val b = rng.nextDouble() * 4
+      val c = rng.nextInt(5).toDouble
+      (a, b, c, 1.5 * a - b + 0.3 * c + 0.2 * rng.nextGaussian(),
+        a * b - c + 0.2 * rng.nextGaussian())
+    }.toDF("a", "b", "c", "y1", "y2").repartition(3)
+    val m = GraftBoost.trainMultiOutput(df,
+      DMatrixSpec(labelCol = Seq("y1", "y2")),
+      TrainParams(numRounds = 4, maxDepth = 3, seed = 1616))
+    assert(moFingerprint(m) === "ec21b6b2b99b97ae7f14e639f89a1352")
+  }
+
+  test("multi-output binary:logistic, 2 targets: non-constant " +
+      "hessian pins the mean-hessian cover (multi-output fingerprint)") {
+    val rng = new scala.util.Random(171)
+    val df = (1 to 400).map { _ =>
+      val a = rng.nextDouble() * 2 - 1; val b = rng.nextDouble() * 2 - 1
+      (a, b, if (a + 0.3 * rng.nextGaussian() > 0) 1.0 else 0.0,
+        if (a - b + 0.3 * rng.nextGaussian() > 0) 1.0 else 0.0)
+    }.toDF("a", "b", "y1", "y2").repartition(3)
+    val m = GraftBoost.trainMultiOutput(df,
+      DMatrixSpec(labelCol = Seq("y1", "y2")),
+      TrainParams(objective = "binary:logistic", numRounds = 4,
+        maxDepth = 3, seed = 1717))
+    assert(moFingerprint(m) === "889ed141d3554b23d660ba42ee0a75c8")
+  }
 }

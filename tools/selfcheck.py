@@ -1,13 +1,24 @@
 #!/usr/bin/env python3
 """Local replica of the driver's correctness gate: compare Verify output
-parquet against DuckDB oracle results (sorted columns, value hash)."""
+parquet against DuckDB oracle results (sorted columns, value hash).
+
+usage: selfcheck.py [OUT_DIR [SF_DIR [PREFIXES]]]
+PREFIXES is a comma-separated list of query-name prefixes, matched the
+way Verify's third argument is. An oracle-paired query the filter
+selects that has no output directory (Verify logs a failed query and
+writes nothing) counts as MISSING, a failure."""
 import json, sys, glob, os
 import duckdb, pandas as pd
 import numpy as np
 
 out_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/graft_verify"
 sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
-only = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
+prefixes = sys.argv[3].split(",") if len(sys.argv) > 3 else None
+
+
+def selected(name):
+    return prefixes is None or any(name.startswith(p) for p in prefixes)
+
 
 oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
 con = duckdb.connect()
@@ -26,12 +37,14 @@ def canon(df):
     return df
 
 fails = 0
+ran = set()
 for name in sorted(os.listdir(out_dir)):
     d = os.path.join(out_dir, name)
     if not os.path.isdir(d):
         continue
-    if only and name not in only:
+    if not selected(name):
         continue
+    ran.add(name)
     files = glob.glob(f"{d}/*.parquet")
     spark_df = pd.concat([pd.read_parquet(f) for f in files])
     if name not in oracles:
@@ -67,5 +80,8 @@ for name in sorted(os.listdir(out_dir)):
     except Exception as e:
         fails += 1
         print(f"{name}: ERR {e}")
+for name in sorted(n for n in oracles if selected(n) and n not in ran):
+    fails += 1
+    print(f"{name}: MISSING (no output directory)")
 print(f"fails={fails}")
 sys.exit(1 if fails else 0)
